@@ -34,7 +34,7 @@ import sys
 import time
 
 from traffic_accidents_airflow_kafka_spark.plans import QUERY_REGISTRY
-from traffic_accidents_airflow_kafka_spark.plans.llm import artifact_build_times
+from traffic_accidents_airflow_kafka_spark.plans.llm_shared import artifact_build_times
 from traffic_accidents_airflow_kafka_spark.session import get_spark
 from traffic_accidents_airflow_kafka_spark.streaming.fanout import (
     last_run_metadata as fanout_metadata,
@@ -135,7 +135,7 @@ def main() -> None:
         "tier1_total": round(total - tier0_total, 4),
         "n_queries": len(timings),
         "tier0_only": tier0_only,
-        # Build-once artifact memos (plans/llm.py:_artifact) are built
+        # Build-once artifact memos (plans/llm_shared.py:_artifact) are built
         # during the FIRST consumer's untimed warmup, so per-query
         # timings above are steady-state consumer cost only. This field
         # makes that accounting explicit: the one-time build seconds per

@@ -10,12 +10,23 @@ import os
 import duckdb
 import pandas as pd
 
-from traffic_accidents_airflow_kafka_spark.sources.tables import TESTDATA_TABLES
+ORACLE_TABLES = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
+)
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for name in TESTDATA_TABLES:
+    for name in ORACLE_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
             con.execute(

@@ -164,7 +164,7 @@ def test_fanout_broadcast_fallback_is_loud_and_correct(spark, sf_dir, monkeypatc
     # Self-contained regardless of test order: clear the session memo
     # and the table so run_topics_fanout must actually call the
     # (refusing) build instead of reusing an earlier test's artifact.
-    from traffic_accidents_airflow_kafka_spark.plans.llm import evict_artifacts
+    from traffic_accidents_airflow_kafka_spark.plans.llm_shared import evict_artifacts
 
     evict_artifacts(sf_dir)
     spark.sql(

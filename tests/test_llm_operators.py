@@ -466,15 +466,6 @@ def test_synth_assets_real_decode_roundtrip(docs):
         assert r["mime"] == ("image/png" if did % 2 == 0 else "image/bmp")
 
 
-def test_frame_sample_strides(docs):
-    assets = multimodal.documents_as_assets(docs).filter(F.col("asset_id") == 0)
-    frames = multimodal.frame_sample(assets, every_n_bytes=16).collect()
-    payload = BASE.encode()
-    expected = [payload[i : i + 16] for i in range(0, len(payload), 16)]
-    got = [bytes(r["frame"]) for r in sorted(frames, key=lambda r: r["frame_idx"])]
-    assert got == expected
-
-
 def test_multimodal_embed_then_ann_composite(docs):
     """The multimodal pipeline end to end: opaque payloads → Arrow-batched
     feature extraction → the SAME similarity operator the embeddings table
@@ -522,26 +513,6 @@ def test_pii_redaction_semantics(spark):
     assert out[2]["red"] == "no pii here"
     assert (out[3]["e"], out[3]["p"]) == (2, 1)
     assert out[3]["red"] == "mails <EMAIL> <EMAIL> and <PHONE>"
-
-
-def test_resize_images_plumbing(spark):
-    from traffic_accidents_airflow_kafka_spark.operators import multimodal
-
-    assets = spark.createDataFrame(
-        [(1, "image/png", b"abc"), (2, "image/png", None), (3, "image/png", b"")],
-        multimodal.ASSET_SCHEMA,
-    )
-    out = multimodal.resize_images(assets, target_w=4, target_h=2).collect()
-    got = {r["asset_id"]: r for r in out}
-    assert set(got) == {1, 3}  # null payloads dropped
-    assert all(r["width"] == 4 and r["height"] == 2 for r in out)
-    assert got[1]["payload"] == b"abcabcab"  # tiled to 4*2 bytes
-    assert got[3]["payload"] == b"\x00" * 8  # empty payload zero-filled
-    # A custom decoder hook slots in unchanged.
-    out2 = multimodal.resize_images(
-        assets, 2, 2, resize=lambda p, w, h: bytes([len(p)] * (w * h))
-    ).collect()
-    assert {r["asset_id"]: r["payload"] for r in out2}[1] == bytes([3, 3, 3, 3])
 
 
 def test_bigram_lm_scores_rank_fluent_above_gibberish(spark):
@@ -972,7 +943,7 @@ def test_tfidf_ranks_distinctive_terms_over_ubiquitous(spark, tmp_path):
     same-tf term unique to one document; top-1 for the planted doc is
     its distinctive term."""
     import pyspark.sql.functions as F
-    from traffic_accidents_airflow_kafka_spark.plans.llm import tfidf_top_terms
+    from traffic_accidents_airflow_kafka_spark.plans.llm_analysis import tfidf_top_terms
 
     docs = spark.createDataFrame(
         [
@@ -1016,7 +987,7 @@ def _write_docs(spark, tmp_path, texts):
 def test_vocab_coverage_matches_hand_zipf(spark, tmp_path):
     """Planted counts: 'a'x6 'b'x3 'c'x1 -> top-10 covers everything;
     coverage fractions follow the hand-computed mass."""
-    from traffic_accidents_airflow_kafka_spark.plans.llm import vocab_coverage
+    from traffic_accidents_airflow_kafka_spark.plans.llm_analysis import vocab_coverage
 
     sf = _write_docs(spark, tmp_path, ["a a a b", "a a a b b c"])
     out = vocab_coverage(spark, sf).toPandas().set_index("cutoff")
@@ -1030,7 +1001,7 @@ def test_vocab_coverage_matches_hand_zipf(spark, tmp_path):
 def test_pmi_prefers_bound_phrase_over_independent_pair(spark, tmp_path):
     """A bigram that ALWAYS co-occurs ('new york' x5) outranks a pair of
     frequent-but-independent words; sub-floor bigrams are dropped."""
-    from traffic_accidents_airflow_kafka_spark.plans.llm import pmi_collocations
+    from traffic_accidents_airflow_kafka_spark.plans.llm_analysis import pmi_collocations
 
     texts = ["new york " + "x y " * 5]*5  # 'new york' 5x; x,y frequent, mixed order
     texts += ["y x " * 5] * 5
@@ -1108,7 +1079,7 @@ def test_leakfree_split_keeps_neardup_family_together(spark, tmp_path):
     """Plant a 3-doc near-dup family among distinct singletons; the split
     is keyed on the CLUSTER, so all three must land in one split and the
     straddle proof column must read 1."""
-    from traffic_accidents_airflow_kafka_spark.plans.llm import (
+    from traffic_accidents_airflow_kafka_spark.plans.llm_analysis import (
         leakfree_split_stats,
     )
 

@@ -13,7 +13,7 @@ from traffic_accidents_airflow_kafka_spark.plans.extensions import (
     k_anonymity_audit,
     snapshot_diff_report,
 )
-from traffic_accidents_airflow_kafka_spark.plans.llm import bm25_search
+from traffic_accidents_airflow_kafka_spark.plans.llm_retrieval import bm25_search
 from traffic_accidents_airflow_kafka_spark.plans.stats import feature_drift_psi
 
 _ORDERS_SCHEMA = (
@@ -125,7 +125,7 @@ def test_incremental_neardup_probe_finds_corpus_twin(spark, tmp_path):
     """Arrival 5 duplicates corpus doc 1 -> flagged with est_sim 1.0
     against best_old_id 1; arrival 10 shares nothing -> absent; corpus
     docs never pair with each other."""
-    from traffic_accidents_airflow_kafka_spark.plans.llm import (
+    from traffic_accidents_airflow_kafka_spark.plans.llm_retrieval import (
         incremental_neardup_arrivals,
     )
 

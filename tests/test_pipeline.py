@@ -20,11 +20,13 @@ import pytest
 from traffic_accidents_airflow_kafka_spark.pipeline import ingest, merge, osm
 from traffic_accidents_airflow_kafka_spark.schemas import BBOX_COUNT_COLUMNS
 
+from .conftest import GOLDEN_SKIP_REASON
+
 RAW_GLOB = "/root/reference/data/raw/bbox_*_osm.csv"
 GOLDEN = "/root/reference/data/processed/combined_bbox_summary_final.csv"
 
 needs_reference_data = pytest.mark.skipif(
-    not os.path.exists(GOLDEN), reason="reference golden file not available"
+    not os.path.exists(GOLDEN), reason=GOLDEN_SKIP_REASON
 )
 
 

@@ -320,48 +320,6 @@ def test_excise_spans_matches_python_reference(spark, texts, flagged):
         assert got[i] == (" ".join(kept), removed), (t, flagged, got[i])
 
 
-LATS = st.floats(min_value=25.0, max_value=49.0, allow_nan=False)
-LONS = st.floats(min_value=-124.0, max_value=-67.0, allow_nan=False)
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(st.tuples(LATS, LONS), min_size=1, max_size=20),
-    st.lists(st.tuples(LATS, LONS), min_size=1, max_size=4),
-    st.floats(min_value=1.0, max_value=200.0, allow_nan=False),
-)
-def test_radius_join_equals_bruteforce(spark, pts, cens, r_km):
-    """Grid-candidate radius join returns EXACTLY the brute-force
-    haversine pair set for random continental-US coordinates — the
-    conservative cell sizing may only add candidates, never lose pairs."""
-    from traffic_accidents_airflow_kafka_spark.operators import geo
-
-    from .test_geo import _hav_py as hav  # single shared brute-force reference
-
-    pdf = spark.createDataFrame(
-        [(i, la, lo) for i, (la, lo) in enumerate(pts)],
-        "pid long, lat double, lon double",
-    )
-    cdf = spark.createDataFrame(
-        [(i, la, lo) for i, (la, lo) in enumerate(cens)],
-        "cid long, c_lat double, c_lon double",
-    )
-    got = {(r["pid"], r["cid"]) for r in geo.radius_join(pdf, cdf, r_km).collect()}
-    want = {
-        (i, j)
-        for i, (pla, plo) in enumerate(pts)
-        for j, (cla, clo) in enumerate(cens)
-        if hav(pla, plo, cla, clo) <= r_km
-    }
-    # The operator rounds distance_km to 6 decimals before the <= r_km
-    # comparison, so a pair landing within half an ulp of the boundary
-    # may flip vs the unrounded brute force: any disagreement must sit
-    # within 1e-5 km of the radius — everything else is a real miss.
-    for pid, cid in got.symmetric_difference(want):
-        d = hav(*pts[pid], *cens[cid])
-        assert abs(d - r_km) < 1e-5, (pid, cid, d, r_km)
-
-
 def _spans_reference(docs: list[tuple[int, str]], k: int, min_docs: int):
     """Brute-force repeated_spans: literal k-gram strings, dict support
     counting, linear gaps-and-islands merge (gap <= k fuses)."""

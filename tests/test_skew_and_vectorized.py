@@ -1,5 +1,6 @@
 """Salted-join equivalence, two-phase aggregation equivalence, and the
-vectorized cosine path agreeing with the exact fold."""
+approximate ANN tiers (multi-probe LSH, PQ, IVF-PQ) measured against the
+exact cosine top-k."""
 
 from __future__ import annotations
 
@@ -76,109 +77,6 @@ def test_join_cardinality_prediction_matches_reality(spark):
     assert st.top_pair_rows == 100 * 50
     assert st.n_left == 104 and st.n_right == 53  # private keys counted
     assert st.n_common_keys == 2
-
-
-def test_vectorized_cosine_matches_fold(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 5)
-    exact = {
-        (r["qid"], r["rank"]): (r["nid"], r["cosine"])
-        for r in similarity.cosine_topk(emb, qids, k=3).collect()
-    }
-    vec = {
-        (r["qid"], r["rank"]): (r["nid"], r["cosine"])
-        for r in similarity.cosine_topk_vectorized(emb, qids, k=3).collect()
-    }
-    assert set(exact) == set(vec)
-    for key, (nid, cos) in exact.items():
-        vnid, vcos = vec[key]
-        assert vnid == nid  # same neighbor ranking
-        assert abs(vcos - cos) < 1e-6
-
-
-def test_vectorized_cosine_caps_driver_collect(spark, sf_dir):
-    """The query-side collect is bounded: exceeding max_queries raises
-    instead of silently pulling a corpus to the driver — including the
-    query_ids=None whole-table form."""
-    import pytest
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="max_queries"):
-        similarity.cosine_topk_vectorized(emb, None, k=3, max_queries=10)
-    # A bounded query set under the cap still works.
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 3)
-    rows = similarity.cosine_topk_vectorized(emb, qids, k=3, max_queries=10).collect()
-    assert {r["qid"] for r in rows} == {0, 1, 2}
-
-
-def test_ivf_ann_recall_vs_exact(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact_top1 = {
-        r["qid"]: r["nid"]
-        for r in similarity.cosine_topk(emb, k=1).collect()
-    }
-    ivf = similarity.ivf_ann_topk(emb, n_centroids=8, n_probe=3, k=1)
-    ivf_top1 = {r["qid"]: r["nid"] for r in ivf.collect()}
-    # Probing 3/8 cells must recover a solid share of true nearest
-    # neighbors (recall is the tunable; the structure is what we assert).
-    hits = sum(1 for q, n in exact_top1.items() if ivf_top1.get(q) == n)
-    assert hits / len(exact_top1) > 0.5
-    # Every query produced a candidate (probe cells are never empty here).
-    assert set(ivf_top1) == set(exact_top1)
-
-
-def test_ivf_vectorized_matches_exact_fold_path(spark, sf_dir):
-    """The Arrow matmul path and the exact HOF-fold path share centroids,
-    probing, and tie-breaks — same neighbors, cosines within float
-    re-association tolerance."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vec = similarity.ivf_ann_topk(emb, n_centroids=8, n_probe=3, k=2)
-    hof = similarity.ivf_ann_topk(
-        emb, n_centroids=8, n_probe=3, k=2, vectorized=False
-    )
-    vec_rows = {(r["qid"], r["rank"]): r for r in vec.collect()}
-    hof_rows = {(r["qid"], r["rank"]): r for r in hof.collect()}
-    assert set(vec_rows) == set(hof_rows)
-    agree = sum(
-        1
-        for key, r in vec_rows.items()
-        if r["nid"] == hof_rows[key]["nid"]
-        and abs(r["cosine"] - hof_rows[key]["cosine"]) < 1e-3
-        and r["cell"] == hof_rows[key]["cell"]
-    )
-    # Identical modulo rounding-induced rank swaps on near-equal cosines.
-    assert agree / len(vec_rows) > 0.95
-
-
-def test_ivf_handles_empty_and_tiny_corpora(spark):
-    """A 100 TB pipeline's first backfill starts empty — ANN build must
-    not crash on empty or smaller-than-k corpora."""
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert similarity.ivf_ann_topk(empty, n_centroids=4, n_probe=2, k=1).count() == 0
-
-    tiny = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in (1, 3, 5)],  # no id divisible by 4
-        "vec_id long, embedding array<float>",
-    )
-    out = similarity.ivf_ann_topk(tiny, n_centroids=8, n_probe=8, k=1).collect()
-    assert {r["qid"] for r in out} == {1, 3, 5}  # clamped centroids, all served
-
-
-def test_ivf_training_sample_is_capped(spark, sf_dir):
-    """The driver-side training collect must be bounded at any corpus
-    size (round-2 finding: the modulus alone collects 25% of the corpus).
-    A tiny cap must still yield a working quantizer over every query."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    similarity.clear_ivf_centroid_cache()
-    out = similarity.ivf_ann_topk(
-        emb, n_centroids=4, n_probe=4, k=1, max_train_sample=16, refresh=True
-    )
-    got = {r["qid"] for r in out.collect()}
-    assert got == {r["vec_id"] for r in emb.select("vec_id").collect()}
-    # Centroid count is bounded by the capped sample, never above it.
-    key = next(iter(similarity._IVF_CENTROID_CACHE))
-    assert len(similarity._IVF_CENTROID_CACHE[key]) <= 16
-    similarity.clear_ivf_centroid_cache()
 
 
 def test_multiprobe_lsh_recall_at_least_single_probe(spark, sf_dir):

@@ -345,6 +345,42 @@ def test_streaming_observe_reports_per_batch_metrics(spark, sf_dir):
     assert got_sum == want_sum
 
 
+def test_events_ts_sniff_sees_file_rewritten_at_same_path(spark, tmp_path):
+    """The memoized ``ts`` sniff is keyed on the file version, not the
+    path: rewriting events.parquet in place with the other timestamp
+    resolution must change the declared stream type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    path = str(tmp_path / "events.parquet")
+
+    def write(unit: str) -> None:
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([1], pa.int64()),
+                    "ts": pa.array([1_700_000_000_000_000], pa.timestamp("us")).cast(
+                        pa.timestamp(unit)
+                    ),
+                    "user_id": pa.array([7], pa.int64()),
+                    "event_type": ["click"],
+                    "value": [1.5],
+                    "props": ["{}"],
+                }
+            ),
+            path,
+        )
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    write("ns")
+    first = streaming._events_stream_schema(spark, str(tmp_path))["ts"].dataType
+    write("us")
+    second = streaming._events_stream_schema(spark, str(tmp_path))["ts"].dataType
+    assert isinstance(first, LongType)
+    assert isinstance(second, TimestampNTZType)
+
+
 def test_stream_table_source_handles_both_layouts(spark, sf_dir, tmp_path):
     """stream_table_source (r8): the driver's testdata stores tables as
     single files ({table}.parquet inside sf_dir, streamed via a parent-

@@ -48,31 +48,13 @@ def word_ngrams(text: Column | str, n: int) -> Column:
     )
 
 
-def benchmark_ngram_digests(
-    bench: DataFrame, text_col: str, n: int
-) -> DataFrame:
-    """Distinct md5 digests of every word ``n``-gram in the benchmark set.
-
-    md5 (not xxhash64) so the digest is reproducible in any engine — the
-    same cross-engine-parity choice as `operators/dedup.py:text_hash`.
-    Output column: ``gram_h``.
-    """
-    return (
-        bench.select(
-            F.explode(word_ngrams(text_col, n)).alias("gram")
-        )
-        .select(F.md5("gram").alias("gram_h"))
-        .distinct()
-    )
-
-
 def _word_ngram_key_rows(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """(id, __gh) rows — one per word-``n``-gram INSTANCE, keyed by the
     xxhash64 of the n-long slice of per-word xxhash64s instead of the
-    md5 of the built gram string (the r10 hash-slice keying the
-    positional-ngram/shingle/Gopher families already use: the gram text
+    md5 of the built gram string (the hash-slice keying the
+    positional-ngram/shingle/Gopher families also use: the gram text
     was only ever an equality key here, so the explode and the join
     carry 8-byte longs and the n-word concat string is never built).
     Each word is hashed once into a per-row long array in its OWN
@@ -83,7 +65,7 @@ def _word_ngram_key_rows(
     collisions (birthday-bounded at ~2^32 distinct grams); the DuckDB
     oracles match md5 over the literal gram text, so green parity
     doubles as the collision check — at the benchmark scales actually
-    run. SCALE BOUND (ADVICE r10): at the advertised 100 TB corpus
+    run. SCALE BOUND: at the advertised 100 TB corpus
     (~10^13 distinct 8-grams) expected spurious cross-side hits under a
     single 64-bit key reach order-1 per ~10^6-row eval set — enough to
     perturb n_hit by a few counts but ~never to flip a contaminated
@@ -127,17 +109,14 @@ def contamination(
     only aggregation is the per-doc count, which combines partially
     before any exchange.
     """
-    # r10: both sides keyed on the gram's word-hash-slice xxhash64 (see
-    # _word_ngram_key_rows) — the gram text and its md5 were only ever
-    # the join equality key, and never building the 8-word concat string
-    # per instance cuts the dominant per-row cost
-    # (benchmark_ngram_digests keeps the md5 form for any caller that
-    # needs an engine-stable digest).
-    # r11 (ADVICE r10 medium): the bench side only contributes its gram
-    # KEYS, so it must not be required to carry the TRAIN corpus's id
-    # column — eval suites are often keyed differently or unkeyed. A
-    # constant stands in as the id (pruned away by the select below),
-    # restoring the pre-r10 contract that only text_col is read from
+    # Both sides keyed on the gram's word-hash-slice xxhash64 (see
+    # _word_ngram_key_rows) — the gram text was only ever the join
+    # equality key, and never building the 8-word concat string per
+    # instance cuts the dominant per-row cost.
+    # The bench side only contributes its gram KEYS, so it must not be
+    # required to carry the TRAIN corpus's id column — eval suites are
+    # often keyed differently or unkeyed. A constant stands in as the id
+    # (pruned away by the select below): only text_col is read from
     # ``bench``.
     digests = F.broadcast(
         _word_ngram_key_rows(
@@ -306,7 +285,7 @@ def semantic_contamination(
     Zero-norm vectors (either side) score a sentinel -2.0 instead of
     0/0 = NaN — NaN would compare GREATER than every value in Spark
     while DuckDB's NaN ordering could disagree at the threshold, a
-    latent cross-engine divergence (r7 advisory).
+    latent cross-engine divergence.
     """
     from .similarity import _dot_double, vector_norm
 
@@ -356,7 +335,7 @@ def semantic_contamination_lsh(
     dim: int = 64,
     seed: int = 7,
 ) -> DataFrame:
-    """The 100 TB form of :func:`semantic_contamination` (r7 VERDICT #5):
+    """The 100 TB form of :func:`semantic_contamination`:
     LSH-BUCKETED candidate generation instead of the broadcast-array
     fold, for eval suites past the broadcast bound (the exact fold
     carries ~100k x 768-dim eval items as a ~300 MB broadcast and does

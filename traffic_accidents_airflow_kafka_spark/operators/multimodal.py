@@ -15,7 +15,7 @@ The Spark-side contract for image/audio/video at 100 TB:
   executor memory, and repartition by a content-hash prefix for even
   batch sizes before the Python stage.
 
-Decode depth (r6 headers, r9-r10 pixels): ``decode_image_meta`` is a
+Decode depth: ``decode_image_meta`` is a
 REAL pure-Python header parser — it reads true (width, height) from
 genuine PNG / BMP / GIF / JPEG bytes — and ``decode_image_pixels`` is a
 REAL pure-stdlib FULL pixel decoder: PNG IDAT inflates via ``zlib`` with
@@ -2163,85 +2163,6 @@ def embed_assets(assets: DataFrame, dim: int = 64, embed=fake_embed) -> DataFram
                     "embedding": [
                         embed(p, dim) if p is not None else None
                         for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return assets.mapInPandas(batches, out_schema)
-
-
-def frame_sample(assets: DataFrame, every_n_bytes: int = 32) -> DataFrame:
-    """'Frame sampling' plumbing demo: slice the payload at a fixed byte
-    stride (the video-frame analog), emitting (asset_id, frame_idx,
-    frame_bytes). Real frame extraction swaps the slicing for a decoder
-    call inside the same mapInPandas shape."""
-
-    out_schema = StructType(
-        [
-            StructField("asset_id", LongType(), False),
-            StructField("frame_idx", IntegerType(), False),
-            StructField("frame", BinaryType(), True),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                for i, off in enumerate(range(0, len(payload), every_n_bytes)):
-                    ids.append(aid)
-                    idxs.append(i)
-                    frames.append(bytes(payload[off : off + every_n_bytes]))
-            yield pd.DataFrame({"asset_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return assets.mapInPandas(batches, out_schema)
-
-
-def resize_images(
-    assets: DataFrame, target_w: int = 64, target_h: int = 64, resize=None
-) -> DataFrame:
-    """Image-resize plumbing: (asset_id, payload) → (asset_id, width,
-    height, payload) at the target dimensions, as an Arrow-batched
-    ``mapInPandas`` stage.
-
-    ``resize`` is the decoder hook — a real deployment passes
-    ``lambda payload, w, h: PIL-or-opencv bytes`` and nothing else
-    changes. The default deterministic stand-in truncates/tiles the
-    payload to exactly ``target_w * target_h`` bytes (one fake byte per
-    output pixel), so batch shapes, output sizes, and schema are
-    exercised for real: every output payload is the exact size a real
-    w×h single-channel decode would produce.
-    """
-
-    out_schema = StructType(
-        [
-            StructField("asset_id", LongType(), False),
-            StructField("width", IntegerType(), False),
-            StructField("height", IntegerType(), False),
-            StructField("payload", BinaryType(), True),
-        ]
-    )
-    n_out = target_w * target_h
-
-    def _fake_resize(payload: bytes, w: int, h: int) -> bytes:
-        reps = -(-n_out // max(len(payload), 1))  # ceil-div tile count
-        return (payload * reps)[:n_out] if payload else b"\x00" * n_out
-
-    fn = resize or _fake_resize
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            keep = pdf["payload"].notna()
-            pdf = pdf[keep]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": [
-                        fn(bytes(p), target_w, target_h) for p in pdf["payload"]
                     ],
                 }
             )

@@ -70,8 +70,6 @@ def duplicate_key_count(df: DataFrame, key_cols: list[str]) -> DataFrame:
 # serialize giant docs into single tasks, exactly what kills web-crawl
 # corpora with MB-scale outlier documents.
 
-from .decontam import word_ngrams
-
 
 def _per_doc_gram_profile(
     df: DataFrame, id_col: str, text_col: str, n: int, prefix: str

@@ -79,100 +79,6 @@ def cosine_topk(
     )
 
 
-def cosine_topk_vectorized(
-    vectors: DataFrame,
-    query_ids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    max_queries: int = 100_000,
-) -> DataFrame:
-    """Arrow-vectorized variant of :func:`cosine_topk`: queries collect to
-    the driver (small by contract), broadcast as a NumPy matrix, and each
-    partition computes a whole candidates×queries matmul via
-    ``mapInPandas`` — the 10-100× batch-over-scalar path when the fold
-    expression becomes the bottleneck at higher dimensionality.
-
-    Same ranking as the exact fold (float64 matmul); last-digit rounding
-    may differ from the sequential fold, so the oracle-checked entry stays
-    on :func:`cosine_topk` and this one is bounded against it in tests.
-
-    ``max_queries`` bounds the driver collect (the same discipline as the
-    IVF trainer's ``max_train_sample``): the query side must fit on the
-    driver for the broadcast matmul to make sense at all, so exceeding
-    the cap is an error — pass a bounded ``query_ids`` or raise the cap
-    deliberately, never silently collect a corpus.
-    """
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    q = vectors
-    if query_ids is not None:
-        q = vectors.join(query_ids, id_col, "left_semi")
-    q_rows = q.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_vectorized collects the query side to the driver; "
-            f"got more than max_queries={max_queries} rows "
-            f"({'no query_ids passed — the whole corpus is the query set' if query_ids is None else 'narrow query_ids'} "
-            f"or raise max_queries deliberately)"
-        )
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    out_schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("nid", LongType()),
-            StructField("cosine", DoubleType()),
-            StructField("part_rank", IntegerType()),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            c_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            sims = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)  # candidates × queries
-            frames = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = c_ids != qid
-                ids, vals = c_ids[mask], col[mask]
-                top = np.argsort(-vals, kind="stable")[: k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qid,
-                            "nid": ids[top],
-                            "cosine": vals[top],
-                            "part_rank": np.arange(1, len(top) + 1, dtype=np.int32),
-                        }
-                    )
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                columns=["qid", "nid", "cosine", "part_rank"]
-            )
-
-    # Per-partition top-k then a global re-rank over the k×partitions
-    # survivors — the classic distributed top-k reduction.
-    partial = vectors.select(id_col, vec_col).mapInPandas(batches, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", F.round("cosine", 4).alias("cosine"))
-    )
-
-
 def hyperplane_planes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     """Deterministic random hyperplanes (seeded Gaussian)."""
     rng = np.random.default_rng(seed)
@@ -194,22 +100,6 @@ def lsh_bucket(vec_col: Column | str, planes: list[list[float]]) -> Column:
     return bucket
 
 
-#: Trained coarse quantizers, keyed by (corpus plan hash, cols, k, seed).
-_IVF_CENTROID_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
-
-
-def clear_ivf_centroid_cache() -> None:
-    """Drop every cached coarse quantizer (explicit index rebuild).
-
-    The centroid cache keys on the corpus *plan* (semanticHash), which is
-    the right identity for an ANN index — built once, reused across
-    searches — but goes stale if the table's underlying files change
-    under the same plan. Call this after a data refresh, exactly like
-    rebuilding a FAISS index after re-ingesting the corpus.
-    """
-    _IVF_CENTROID_CACHE.clear()
-
-
 def _cell_assignments(
     df: DataFrame,
     id_col: str,
@@ -223,9 +113,8 @@ def _cell_assignments(
 
     ``n_probe=1`` → the inverted-file assignment (argmin cell per vector);
     ``n_probe>1`` → the query-side probe expansion (top-``n_probe`` cells
-    per vector, one output row each). Ties break to the lowest cell id on
-    both paths (np.argmin / stable argsort), matching the exact path's
-    ``array_sort((dist, cell))`` ordering.
+    per vector, one output row each). Ties break to the lowest cell id
+    (np.argmin / stable argsort).
     """
     import pandas as pd
     from pyspark.sql.types import IntegerType, StructField, StructType
@@ -262,158 +151,15 @@ def _cell_assignments(
     return base.mapInPandas(fn, out_schema)
 
 
-def _cell_search_vectorized(
-    probes: DataFrame,
-    cand: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Cogrouped per-cell search: for each cell, ONE queries×members cosine
-    matmul with per-query top-k — the IVF compute shape (|cell| work per
-    probe, never an exploded pair stream of interpreted folds). The shuffle
-    is keyed on cell; Lloyd's roughly-balanced cells keep it even, and a
-    pathologically hot cell is exactly what AQE skew-split handles.
-    """
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("nid", LongType()),
-            StructField("cosine", DoubleType()),
-            StructField("cell", IntegerType()),
-        ]
-    )
-    empty = pd.DataFrame({"qid": [], "nid": [], "cosine": [], "cell": []})
-
-    def fn(key, qpdf, npdf):
-        if not len(qpdf) or not len(npdf):
-            return empty
-        (cell,) = key
-        Q = np.array(qpdf[vec_col].tolist(), dtype=np.float64)
-        N = np.array(npdf[vec_col].tolist(), dtype=np.float64)
-        qids = qpdf[id_col].to_numpy(dtype=np.int64)
-        nids = npdf[id_col].to_numpy(dtype=np.int64)
-        sims = (Q @ N.T) / np.outer(
-            np.linalg.norm(Q, axis=1), np.linalg.norm(N, axis=1)
-        )
-        frames = []
-        for i, qid in enumerate(qids):
-            mask = nids != qid
-            ids, vals = nids[mask], sims[i][mask]
-            if not len(ids):
-                continue
-            # Deterministic per-cell top-k: cosine desc, nid asc.
-            order = np.lexsort((ids, -vals))[:k]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "qid": qid,
-                        "nid": ids[order],
-                        "cosine": vals[order],
-                        "cell": int(cell),
-                    }
-                )
-            )
-        return pd.concat(frames) if frames else empty
-
-    return (
-        probes.groupBy("cell")
-        .cogroup(cand.groupBy("cell"))
-        .applyInPandas(fn, out_schema)
-    )
-
-
-def train_ivf_centroids(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    seed: int = 7,
-    max_train_sample: int = 100_000,
-    refresh: bool = False,
-) -> list[tuple[int, list[float]]] | None:
-    """Train (or fetch the cached) IVF coarse quantizer: seeded Lloyd
-    k-means over a bounded deterministic sample. Returns ``None`` for an
-    empty corpus.
-
-    Training is DRIVER-SIDE NumPy over a deterministic sample — the
-    FAISS/ScaNN idiom: a coarse quantizer is a sample-size problem
-    (k × dim floats of state, a few Lloyd passes over ~10^5 sampled
-    rows), not a cluster problem. The sample is hard-capped at
-    ``max_train_sample`` rows (default 10^5), so the driver collect is
-    bounded at any corpus size.
-
-    The quantizer is BUILT ONCE per (corpus plan, cols, k, seed) and
-    reused across searches — exactly how ANN serving works (the index
-    persists; only searches repeat). semanticHash is an analysis-time
-    plan hash, so the cache key is the logical corpus, not object
-    identity.
-    """
-    cache_key = (vectors.semanticHash(), id_col, vec_col, n_centroids, seed)
-    if refresh:
-        _IVF_CENTROID_CACHE.pop(cache_key, None)
-    centroids = _IVF_CENTROID_CACHE.get(cache_key)
-    if centroids is not None:
-        return centroids
-    # Deterministic modulus sample, HARD-CAPPED at max_train_sample so
-    # the driver collect is bounded no matter the corpus size (at 10^9
-    # rows the modulus alone would pull 2.5x10^8 vectors). The cap is
-    # a LocalLimit: executors stop producing once the limit is met, so
-    # this never scans the full corpus. Few Lloyd iterations on
-    # purpose: IVF needs roughly-balanced cells, not converged
-    # clusters, and a 10^5-row sample is the FAISS-idiom budget.
-    sample = (
-        vectors.filter(F.col(id_col) % 4 == 0)
-        .select(vec_col)
-        .limit(max_train_sample)
-        .collect()
-    )
-    if not sample:
-        # Modulus missed every id (tiny/sparse corpus): fall back to a
-        # deterministic prefix so training still has input.
-        sample = (
-            vectors.orderBy(id_col)
-            .select(vec_col)
-            .limit(max(4 * n_centroids, 64))
-            .collect()
-        )
-    if not sample:
-        return None
-    X = np.array([r[vec_col] for r in sample], dtype=np.float64)
-    n_centroids = min(n_centroids, len(X))
-    rng = np.random.default_rng(seed)
-    cent = X[rng.choice(len(X), size=n_centroids, replace=False)].copy()
-    for _ in range(5):
-        d2 = _float_d2_chunked(X, cent)
-        labels = d2.argmin(axis=1)
-        for c in range(n_centroids):
-            members = X[labels == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
-    centroids = [(i, [float(x) for x in c]) for i, c in enumerate(cent)]
-    _IVF_CENTROID_CACHE[cache_key] = centroids
-    return centroids
-
-
 def _float_d2_chunked(
     X: "np.ndarray", cent: "np.ndarray", chunk: int = 8192
 ) -> "np.ndarray":
     """Float squared distances (n, k), row-chunked: identical float ops
     (and therefore bit-identical results) to the broadcast
     (n, k, d) difference tensor, but peak memory is O(chunk*k*d) instead
-    of O(n*k*d) — the r8 advisory's memory bound, applied to the float
-    trainers without touching their arithmetic (the expanded |x|^2 -
-    2x.c + |c|^2 form would round differently in float; the lattice tier
-    uses it because int64 is exact — see _lattice_d2)."""
+    of O(n*k*d), without touching the float trainers' arithmetic (the
+    expanded |x|^2 - 2x.c + |c|^2 form would round differently in float;
+    the lattice tier uses it because int64 is exact — see _lattice_d2)."""
     out = np.empty((len(X), len(cent)), dtype=np.float64)
     for i in range(0, len(X), chunk):
         blk = X[i : i + chunk]
@@ -421,155 +167,6 @@ def _float_d2_chunked(
             (blk[:, None, :] - cent[None, :, :]) ** 2
         ).sum(axis=2)
     return out
-
-
-def ivf_assign(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    seed: int = 7,
-    max_train_sample: int = 100_000,
-    refresh: bool = False,
-) -> DataFrame | None:
-    """The inverted file itself: every corpus vector with its nearest-cell
-    id — (id_col, vec_col, cell). Returns ``None`` for an empty corpus.
-
-    Exposed so callers that search the SAME index repeatedly (the
-    nprobe-tuning / recall-curve pattern, or a query service answering
-    many query batches) can compute the corpus-scale assignment ONCE,
-    ``.cache()`` it, and pass it to :func:`ivf_ann_topk` via ``assigned=``
-    — the FAISS split between ``index.add`` (once) and ``index.search``
-    (many). Assignment ties break to the lowest cell id, identical on the
-    vectorized and fold paths.
-    """
-    centroids = train_ivf_centroids(
-        vectors, id_col, vec_col, n_centroids, seed, max_train_sample, refresh
-    )
-    if centroids is None:
-        return None
-    cent_mat = np.array([c for _, c in centroids], dtype=np.float64)
-    return _cell_assignments(vectors, id_col, vec_col, cent_mat, 1)
-
-
-def ivf_ann_topk(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 2,
-    k: int = 3,
-    seed: int = 7,
-    query_ids: DataFrame | None = None,
-    max_train_sample: int = 100_000,
-    refresh: bool = False,
-    vectorized: bool = True,
-    assigned: DataFrame | None = None,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: the coarse-quantizer scale
-    path (the alternative to hyperplane LSH).
-
-    Build: seeded Lloyd k-means clusters the corpus into ``n_centroids``
-    cells; every vector is assigned to its nearest cell — the inverted
-    file. Search: each query probes its ``n_probe`` nearest cells and
-    ranks only those cells' members — candidate set shrinks to
-    ~n_probe/n_centroids of the corpus.
-
-    Training (see :func:`train_ivf_centroids`) is driver-side NumPy over
-    a hard-capped sample. Only the two corpus-scale passes distribute:
-    nearest-centroid assignment (one broadcast-centroid map) and the
-    per-cell search join. Callers searching the same index repeatedly
-    should precompute the assignment once with :func:`ivf_assign`,
-    ``.cache()`` it, and pass it via ``assigned=`` — the corpus-scale
-    pass then runs once across N searches instead of N times.
-
-    Cache contract: centroids cache on the corpus plan (semanticHash) —
-    index-build-once semantics. After the underlying data changes, pass
-    ``refresh=True`` or call :func:`clear_ivf_centroid_cache` to rebuild,
-    exactly as you would rebuild a FAISS index (a passed ``assigned`` is
-    the caller's to refresh).
-    """
-    centroids = train_ivf_centroids(
-        vectors, id_col, vec_col, n_centroids, seed, max_train_sample, refresh
-    )
-    if centroids is None:
-        # Empty corpus (first backfill run): empty result, stable
-        # schema — don't crash the pipeline.
-        return vectors.sparkSession.createDataFrame(
-            [], "qid long, nid long, rank int, cosine double, cell int"
-        )
-
-    q_side = vectors
-    if query_ids is not None:
-        q_side = vectors.join(query_ids, id_col, "left_semi")
-
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    if vectorized:
-        # The scale path: Arrow-batched assignment + per-cell matmul
-        # search. Higher-order-function folds are interpreted (not
-        # codegen), so at |corpus| × n_centroids they dominate runtime;
-        # the matmul form does the same arithmetic 10-100× faster and
-        # never materializes an exploded pair stream.
-        cent_mat = np.array([c for _, c in centroids], dtype=np.float64)
-        if assigned is None:
-            assigned = _cell_assignments(vectors, id_col, vec_col, cent_mat, 1)
-        probes = _cell_assignments(q_side, id_col, vec_col, cent_mat, n_probe)
-        sim = _cell_search_vectorized(probes, assigned, id_col, vec_col, k)
-        return (
-            sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "qid", "nid", "rank", F.round("cosine", 4).alias("cosine"), "cell"
-            )
-        )
-
-    def dist2(cent: list[float]) -> Column:
-        lit_c = F.array(*[F.lit(x) for x in cent])
-        diff = F.zip_with(F.col(vec_col), lit_c, lambda a, b: a.cast("double") - b)
-        return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
-
-    cell_dists = F.array(
-        *[F.struct(dist2(c).alias("d"), F.lit(i).alias("cell")) for i, c in centroids]
-    )
-    # The inverted file: one broadcast-centroid pass assigns every vector
-    # to its nearest cell (argmin = head of the sorted (d, cell) array;
-    # ties break on cell id, deterministically — identical to the
-    # vectorized np.argmin tiebreak, so a precomputed `assigned` from
-    # either path slots in here unchanged).
-    if assigned is None:
-        assigned = vectors.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.array_sort(cell_dists).getItem(0).getField("cell").alias("cell"),
-        )
-    probes = q_side.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(
-            F.slice(F.array_sort(cell_dists), 1, n_probe)
-        ).alias("probe"),
-    ).select("qid", "qvec", F.col("probe.cell").alias("cell"))
-    # Interpreted-HOF cost scales with |probes| x |cell members|; bound the
-    # query set (query_ids) for latency-sensitive paths.
-    probes = probes.withColumn("qnorm", vector_norm("qvec"))
-
-    cand = assigned.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"), "cell"
-    ).withColumn("nnorm", vector_norm("nvec"))
-
-    sim = (
-        probes.join(cand, "cell")
-        .filter(F.col("qid") != F.col("nid"))
-        .withColumn(
-            "cosine",
-            _dot_double(F.col("qvec"), F.col("nvec")) / (F.col("qnorm") * F.col("nnorm")),
-        )
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", F.round("cosine", 4).alias("cosine"), "cell")
-    )
 
 
 def cosine_near_dup_pairs(
@@ -644,8 +241,8 @@ def lsh_ann_topk(
         .withColumn(
             "cosine",
             # Zero-norm sentinel on BOTH engines (oracle: _lsh_oracle's
-            # CASE guard) — the NaN-free cross-engine form the family
-            # standardized on in r7-r9.
+            # CASE guard) — the NaN-free cross-engine form the cosine
+            # family shares.
             F.when(
                 lsh_denom > 0,
                 _dot_double(F.col("qvec"), F.col("nvec")) / lsh_denom,
@@ -724,10 +321,9 @@ def lsh_ann_topk_multiprobe(
         .filter(F.col("qid") != F.col("nid"))
         .withColumn(
             "cosine",
-            # Zero-norm sentinel, matching the oracle's CASE guard (r9
-            # review: the oracle gained the guard first, which would
-            # have made the engines disagree in a NEW way on a zero
-            # vector — NULL in Spark vs -2.0 in DuckDB).
+            # Zero-norm sentinel, matching the oracle's CASE guard:
+            # without it a zero vector yields NULL in Spark but -2.0 in
+            # DuckDB.
             F.when(
                 mp_denom > 0,
                 _dot_double(F.col("qvec"), F.col("nvec")) / mp_denom,
@@ -1020,8 +616,8 @@ def ivf_pq_build_index(
     sub = d // m
     n_centroids = min(n_centroids, len(X))
 
-    # Coarse quantizer: seeded Lloyd on the sample (same recipe as
-    # ivf_ann_topk — few iterations; balanced cells, not convergence).
+    # Coarse quantizer: seeded Lloyd on the sample — few iterations;
+    # IVF needs roughly-balanced cells, not converged clusters.
     rng = np.random.default_rng(seed)
     cent_mat = X[rng.choice(len(X), size=n_centroids, replace=False)].copy()
     for _ in range(5):
@@ -1426,8 +1022,8 @@ def pq_rerank_topk(
             "cosine",
             # Zero-norm sentinel (-2.0, the NaN-free cross-engine form
             # the rest of the cosine family uses): Spark would yield
-            # NULL here but DuckDB inf/NaN — the same latent divergence
-            # the r7 advisory fixed in semantic_contamination.
+            # NULL here but DuckDB inf/NaN — the same divergence
+            # semantic_contamination guards against.
             F.when(
                 denom > 0,
                 _dot_double(F.col("qvec"), F.col("nvec")) / denom,
@@ -1515,8 +1111,8 @@ def margin_bitext_pairs(
     the (<= |queries| x k) candidate-target set broadcasts back against
     the source pool — two broadcast passes, the big pools never shuffle.
     For corpus-x-corpus mining swap each broadcast pass for the
-    LSH/IVF-bucketed search (lsh_ann_topk / ivf_ann_topk) exactly as the
-    ANN tiers do; the margin arithmetic is unchanged.
+    LSH/IVF-bucketed search (lsh_ann_topk / ivf_ann_topk_exact) exactly as
+    the ANN tiers do; the margin arithmetic is unchanged.
 
     Output: (src_id, tgt_id, cosine, margin, accepted), one row per
     mined source.
@@ -1759,7 +1355,7 @@ def sq8_ann_topk(
 # ---------------------------------------------------------------------------
 # Integer-lattice exact-replay k-means — the deterministic IVF / PQ tiers.
 #
-# The float k-means tiers above (train_ivf_centroids, _pq_train) are
+# The float k-means tiers above (ivf_pq_build_index, _pq_train) are
 # engine-specific: centroid means are float sums whose summation order no
 # SQL engine reproduces, so their catalog entries could only ever be
 # rows-only. This section removes that limitation the same way the unigram
@@ -1843,7 +1439,7 @@ def _lattice_d2(X: "np.ndarray", cent: "np.ndarray") -> "np.ndarray":
     """Exact int64 squared distances (n, k) via the expanded form
     |x|^2 - 2 x·c + |c|^2 — an integer matmul instead of the broadcast
     (n, k, d) difference tensor, so peak memory is O(n*k) not O(n*k*d)
-    (r8 advisory: at the 100k sample cap with k=16, d=64 the tensor was
+    (at the 100k sample cap with k=16, d=64 the tensor would be
     ~820 MB per Lloyd iteration). Every term is int64 and bounded —
     lattice coords < 2^22, so |x|^2 sums < 2^48*d — far inside int64;
     the RESULT is the bit-identical integer the direct form computes,
@@ -2016,11 +1612,12 @@ def ivf_ann_topk_exact(
     iters: int = LATTICE_ITERS,
     index: tuple["np.ndarray", DataFrame] | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k on the deterministic integer-lattice index —
-    same search semantics as :func:`ivf_ann_topk` (probe the n_probe
-    nearest cells, rank members by exact cosine), but every stage
-    (quantize → Lloyd → assign → probe → rank) replays bit-for-bit in a
-    SQL oracle. Output: (qid, nid, rank, cosine, cell)."""
+    """IVF approximate top-k on the deterministic integer-lattice index:
+    each query probes its n_probe nearest cells and ranks only their
+    members by exact cosine, so the candidate set shrinks to
+    ~n_probe/n_centroids of the corpus. Every stage (quantize → Lloyd →
+    assign → probe → rank) replays bit-for-bit in a SQL oracle.
+    Output: (qid, nid, rank, cosine, cell)."""
     cent, assigned = index if index is not None else ivf_exact_index(
         vectors, id_col, vec_col, n_centroids, iters
     )

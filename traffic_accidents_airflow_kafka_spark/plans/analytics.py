@@ -27,8 +27,6 @@ from .registry import (  # noqa: F401  (re-exported for backwards compat)
     register,
 )
 
-_dec_sum = dec_sum  # historic alias
-
 
 def _dec(c: str) -> F.Column:
     return F.col(c).cast("decimal(18,2)")

@@ -1,9 +1,7 @@
 """Audit / recall-harness family: IVF nprobe curves, PQ recall audits, incremental spans, source quotas, bitext mining, curricula, SQ8 tiers, retrieval metrics.
 
-Segment of the LLM-pipeline catalog (see plans/llm.py — the façade
-that imports every segment in registration order). Split from the
-monolithic llm.py in r10 (VERDICT r9 #8); all entry and helper text is
-carried verbatim, so file history continues there.
+Segment of the LLM-pipeline catalog; ``plans/__init__.py`` imports every
+segment in registration order.
 """
 
 from __future__ import annotations

@@ -1,9 +1,7 @@
 """Multimodal family: asset metadata, real header decode, FULL pixel decode (PNG/BMP/GIF), audio metadata.
 
-Segment of the LLM-pipeline catalog (see plans/llm.py — the façade
-that imports every segment in registration order). Split from the
-monolithic llm.py in r10 (VERDICT r9 #8); all entry and helper text is
-carried verbatim, so file history continues there.
+Segment of the LLM-pipeline catalog; ``plans/__init__.py`` imports every
+segment in registration order.
 """
 
 from __future__ import annotations

@@ -1,9 +1,6 @@
 """Shared helpers for the LLM-pipeline catalog segments: engine-parity SQL folds, the shingle CTE, and the build-once artifact memo (bench.py's artifact_build_sec accounting).
 
-Segment of the LLM-pipeline catalog (see plans/llm.py — the façade
-that imports every segment in registration order). Split from the
-monolithic llm.py in r10 (VERDICT r9 #8); all entry and helper text is
-carried verbatim, so file history continues there.
+It registers no queries, so its import order is not load-bearing.
 """
 
 from __future__ import annotations

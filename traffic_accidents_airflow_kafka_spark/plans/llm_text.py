@@ -1,9 +1,7 @@
 """Text analysis family: corpus prep, quality stats, token accounting, language-ID, PII scrub, fingerprints.
 
-Segment of the LLM-pipeline catalog (see plans/llm.py — the façade
-that imports every segment in registration order). Split from the
-monolithic llm.py in r10 (VERDICT r9 #8); all entry and helper text is
-carried verbatim, so file history continues there.
+Segment of the LLM-pipeline catalog; ``plans/__init__.py`` imports every
+segment in registration order.
 """
 
 from __future__ import annotations

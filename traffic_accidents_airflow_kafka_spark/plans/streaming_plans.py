@@ -866,7 +866,7 @@ def _stream_asset_base(spark: SparkSession) -> str:
 def stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal
     from ..sources.tables import load_table
-    from .llm import _artifact
+    from .llm_shared import _artifact
 
     # The landed drop directory is corpus PREP, not the streaming query —
     # build it once per (session, sf_dir) like every other input artifact
@@ -993,7 +993,7 @@ def stream_topics_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     from ..streaming.fanout import run_topics_fanout
-    from .llm import _artifact
+    from .llm_shared import _artifact
     from .registry import QUERY_REGISTRY
 
     merged = run_topics_fanout(spark, sf_dir)
@@ -1061,7 +1061,7 @@ def _stream_dsir_oracle(n_buckets: int = 64, limit: int = 150) -> str:
         "j -> CAST(instr('0123456789abcdef', substr(md5(t), j, 1)) - 1 AS BIGINT)), "
         "(a, b) -> a * 16 + b)"
     )
-    from .llm import DSIR_SELECT_CENTIBITS
+    from .llm_filtering import DSIR_SELECT_CENTIBITS
 
     return f"""
     WITH atoks AS MATERIALIZED (
@@ -1126,7 +1126,8 @@ def _stream_dsir_oracle(n_buckets: int = 64, limit: int = 150) -> str:
 def stream_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dsir
     from ..sources.tables import load_table
-    from .llm import DSIR_SELECT_CENTIBITS, _artifact
+    from .llm_filtering import DSIR_SELECT_CENTIBITS
+    from .llm_shared import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     frozen = _artifact(

@@ -56,7 +56,7 @@ def _trained_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
     (session, sf_dir) by the same memo the SQ8/near-dup artifacts use;
     bpe_train_merges itself stays un-memoized so the bench still times
     the real training loop."""
-    from .llm import _artifact
+    from .llm_shared import _artifact
 
     return _artifact(
         spark,
@@ -567,7 +567,7 @@ def unigram_seed_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def unigram_viterbi_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import unigram
-    from .llm import _artifact
+    from .llm_shared import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     wf = bpe.word_freq(docs)
@@ -759,7 +759,7 @@ UNI_PRUNE_KEEP = 40
 )
 def unigram_prune_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import unigram
-    from .llm import _artifact
+    from .llm_shared import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     wf = bpe.word_freq(docs)
@@ -821,7 +821,7 @@ def unigram_prune_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def unigram_doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import unigram
-    from .llm import _artifact
+    from .llm_shared import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     wf = bpe.word_freq(docs)
@@ -933,7 +933,7 @@ UNI_SURPRISAL_CENTIBITS = 760
 )
 def unigram_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import unigram
-    from .llm import _artifact
+    from .llm_shared import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     wf = bpe.word_freq(docs)

@@ -14,23 +14,6 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-# Dimension-sized tables: always eligible for broadcast joins. At 100 TB the
-# fact tables (lineitem/orders/events/documents) grow with SF; these do not.
-SMALL_DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table as a lazy DataFrame.
@@ -75,18 +58,6 @@ def scan(
     for col, dtype in (casts or {}).items():
         df = df.withColumn(col, F.col(col).cast(dtype))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for spark.sql entry points)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
 
 
 def read_jsonl(

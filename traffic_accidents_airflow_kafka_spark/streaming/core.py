@@ -48,14 +48,22 @@ TOPICS = (
     "crossings_vs_lesions",
 )
 
-#: (normalized events path) -> sniffed ``ts`` type. The footer sniff is
-#: a driver-side read costing 0.14-0.26 s, and ~12 streaming entries pay
-#: it on EVERY plan build; a parquet file's physical ``ts`` type cannot
-#: change for a given path within a session, so the resolved type — pure
-#: metadata, never data or results — memoizes per path (r11, guide §7.3
-#: driver-side planning cost; the artifact-memo pattern's metadata-only
-#: sibling).
+#: :func:`file_stamp` of events.parquet -> sniffed ``ts`` type. The
+#: footer sniff is a driver-side read costing 0.14-0.26 s, and ~12
+#: streaming entries pay it on EVERY plan build, so the resolved type —
+#: pure metadata, never data or results — is memoized. The key carries
+#: the file's mtime and size, so a file rewritten at the same path is
+#: sniffed again.
 _EVENTS_TS_TYPE: dict = {}
+
+
+def file_stamp(path: str) -> tuple[str, int, int]:
+    """(normalized path, ``st_mtime_ns``, ``st_size``) of ``path``: the
+    memo key for driver-side metadata sniffs, so a file replaced at the
+    same path never serves the old file's schema."""
+    key = os.path.normpath(os.path.abspath(path))
+    st = os.stat(key)
+    return key, st.st_mtime_ns, st.st_size
 
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
@@ -66,11 +74,11 @@ def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
     under ``nanosAsLong``; TIMESTAMP(MICROS) → native timestamp_ntz).
     Hard-coding either silently corrupts the other by 1000× — so sniff the
     batch reader's resolved schema (footer-only, no data scan) and declare
-    the same ``ts`` type for the stream; the sniffed type memoizes per
-    normalized path (see ``_EVENTS_TS_TYPE``).
+    the same ``ts`` type for the stream; the sniffed type is memoized per
+    file version (see ``_EVENTS_TS_TYPE``).
     """
     path = os.path.join(sf_dir, "events.parquet")
-    key = os.path.normpath(os.path.abspath(path))
+    key = file_stamp(path)
     ts_type = _EVENTS_TS_TYPE.get(key)
     if ts_type is None:
         ts_type = spark.read.parquet(path).schema["ts"].dataType

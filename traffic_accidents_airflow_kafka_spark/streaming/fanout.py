@@ -72,9 +72,9 @@ FANOUT_SOURCES = ("orders", "lineitem", "events")
 #: per-topic movers, not the total).
 _LAST_RUN_META: dict = {}
 
-#: (normalized table path) -> resolved parquet schema — driver-side
-#: footer sniffs memoized per path (r11; metadata only, see
-#: run_topics_fanout).
+#: :func:`core.file_stamp` of a table -> resolved parquet schema —
+#: driver-side footer sniffs memoized per file version (metadata only,
+#: see run_topics_fanout).
 _SCHEMA_MEMO: dict = {}
 
 
@@ -294,18 +294,16 @@ def run_topics_fanout(
     EXACTLY the batch topic queries' schemas. Merged results are eagerly
     materialized (localCheckpoint) so the sink directories can be
     reclaimed before the caller consumes them."""
-    # r11 (guide §7.3 driver-side planning cost): the two footer sniffs
-    # cost 0.14-0.26 s each and repeat on every run; a file's schema
-    # cannot change for a given path within a session, so the resolved
-    # StructType — metadata only — memoizes per normalized path (the
-    # streaming/core.py events-type memo, same pattern).
+    # The two footer sniffs cost 0.14-0.26 s each and repeat on every
+    # run, so the resolved StructType — metadata only — is memoized per
+    # file version (path, mtime, size; the streaming/core.py events-type
+    # memo, same pattern).
     def _sniff(table: str):
-        key = os.path.normpath(
-            os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-        )
+        path = os.path.join(sf_dir, f"{table}.parquet")
+        key = streaming.file_stamp(path)
         schema = _SCHEMA_MEMO.get(key)
         if schema is None:
-            schema = spark.read.parquet(key).schema
+            schema = spark.read.parquet(path).schema
             _SCHEMA_MEMO[key] = schema
         return schema
 
@@ -340,7 +338,7 @@ def run_topics_fanout(
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import AnalysisException
 
-    from ..plans.llm import _artifact
+    from ..plans.llm_shared import _artifact
 
     _LAST_RUN_META.clear()
     _LAST_RUN_META["topic_sec"] = {t: 0.0 for t in streaming.TOPICS}
