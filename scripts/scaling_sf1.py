@@ -45,7 +45,7 @@ from traffic_accidents_airflow_kafka_spark.plans.llm_shared import (  # noqa: E4
     artifact_keys,
     clear_sq8_artifact_cache,
 )
-from traffic_accidents_airflow_kafka_spark.session import get_spark  # noqa: E402
+from traffic_accidents_airflow_kafka_spark.session import get_spark, with_conf  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 DST = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -234,33 +234,24 @@ def _run_sessions(
         stateful,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
     if rocksdb:
-        spark.conf.set(key, _ROCKSDB)
-    try:
-        events = streaming.stream_events(spark, sf_dir).withWatermark(
-            "ts", "2 hours"
+        spark = with_conf(
+            spark, {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB}
         )
-        sessions = stateful.sessionize(
-            events.select("user_id", "ts", "value"), gap_seconds=1800
-        )
-        out = streaming.run_available_now(
-            sessions,
-            spark,
-            state_partitions=state_partitions,
-            output_mode="append",
-        )
-        out.select(
-            "user_id", "session_start", "session_end", "n_events",
-            F.round("sum_value", 4).alias("sum_value"), "closed_by",
-        ).orderBy("user_id", "session_start").collect()
-    finally:
-        if rocksdb:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+    events = streaming.stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
+    sessions = stateful.sessionize(
+        events.select("user_id", "ts", "value"), gap_seconds=1800
+    )
+    out = streaming.run_available_now(
+        sessions,
+        spark,
+        state_partitions=state_partitions,
+        output_mode="append",
+    )
+    out.select(
+        "user_id", "session_start", "session_end", "n_events",
+        F.round("sum_value", 4).alias("sum_value"), "closed_by",
+    ).orderBy("user_id", "session_start").collect()
 
 
 def _time_sessions_tuned(

@@ -33,6 +33,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..session import bind
+from .graph import loop_session
+
 
 def text_hash(col: Column | str) -> Column:
     """32-hex md5 digest of the text — the exact-dedup key. md5 over other
@@ -324,8 +327,8 @@ def word_shingle_keys(
     own Project, so the optimizer cannot inline the array build into
     the per-gram lambda) and each shingle key is the xxhash64 of the
     n-long slice — n longs hashed per gram instead of a concat-string
-    build + hash (the r10 positional_ngrams optimization applied to
-    the distinct-shingle relation).
+    build + hash (the :func:`positional_ngrams` keying applied to the
+    distinct-shingle relation).
 
     Equivalence to hashing word_shingles' strings: concat_ws(' ') over
     split(' ') words is injective (words cannot contain the separator),
@@ -363,8 +366,8 @@ def jaccard_pairs(
     # shuffle carries 8-byte longs instead of n-gram text. A cross-shingle
     # hash collision would need ~2^32 distinct shingles to become likely
     # (birthday bound) — far beyond any per-corpus shingle vocabulary.
-    # Input may be pre-keyed (word_shingle_keys' __sh column — the r10
-    # fast path that never builds the gram string at all); the
+    # Input may be pre-keyed (word_shingle_keys' __sh column — the
+    # path that never builds the gram string at all); the
     # frequency cap then groups by the key, identical to grouping by
     # the string under the same injectivity argument.
     sh = shingles
@@ -582,41 +585,33 @@ def connected_components(
     # candidate-pair plan per iteration.
     edges = fwd.union(rev).distinct().localCheckpoint()
 
-    # Size the loop's shuffles to the GRAPH, not the session default: the
-    # pair graph is orders of magnitude smaller than the corpus that
-    # produced it, and per-round fixed cost scales with task count
-    # (measured: 2 rounds over a few hundred edges take 1.07 s at 32
-    # shuffle partitions vs 0.55 s at 1). Count is free here — edges is
-    # already materialized. Restored after the loop.
+    # Rounds shuffle on a graph-sized count (graph.loop_partitions:
+    # measured, 2 rounds over a few hundred edges take 1.07 s at 32
+    # shuffle partitions vs 0.55 s at 1) in a clone of the session.
+    # Count is free here — edges is already materialized.
     spark = pairs.sparkSession
-    n_edges = edges.count()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(prev_parts), n_edges // 500_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        comp = edges.select(F.col("e_src").alias("id")).distinct().select(
-            "id", F.col("id").alias("component")
+    edges = bind(edges, loop_session(spark, edges.count()))
+    comp = edges.select(F.col("e_src").alias("id")).distinct().select(
+        "id", F.col("id").alias("component")
+    )
+    prev_sum = None
+    for _ in range(max_iter):
+        msgs = edges.join(
+            comp.withColumnRenamed("id", "e_src"), "e_src"
+        ).select(F.col("e_dst").alias("id"), "component")
+        new_comp = (
+            comp.unionByName(msgs)
+            .groupBy("id")
+            .agg(F.min("component").alias("component"))
+            .localCheckpoint()
         )
-        prev_sum = None
-        for _ in range(max_iter):
-            msgs = edges.join(
-                comp.withColumnRenamed("id", "e_src"), "e_src"
-            ).select(F.col("e_dst").alias("id"), "component")
-            new_comp = (
-                comp.unionByName(msgs)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
-                .localCheckpoint()
-            )
-            comp.unpersist()
-            comp = new_comp
-            cur_sum = comp.agg(F.sum("component")).first()[0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return comp
+        comp.unpersist()
+        comp = new_comp
+        cur_sum = comp.agg(F.sum("component")).first()[0]
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
+    return bind(comp, spark)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -710,36 +705,30 @@ def connected_components_star(
     edges = edges.localCheckpoint()
 
     spark = pairs.sparkSession
-    n_edges = edges.count()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(prev_parts), n_edges // 500_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        prev_sig = None
-        for _ in range(max_iter):
-            edges = _small_star(_large_star(edges)).localCheckpoint()
-            # Order-independent edge-set signature: count + XOR of per-edge
-            # hashes (XOR cannot overflow under ANSI arithmetic, unlike SUM).
-            sig = edges.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("e_src", "e_dst")).alias("h"),
-            ).first()
-            cur_sig = (sig["n"], sig["h"])
-            if cur_sig == prev_sig:
-                break
-            prev_sig = cur_sig
-        # At fixpoint edges form a star forest: (node -> component min).
-        comp = edges.groupBy(F.col("e_src").alias("id")).agg(
-            F.min("e_dst").alias("component")
-        )
-        # Roots (component minima) carry no outgoing edge — label them
-        # with themselves; nodes already labeled keep their star edge.
-        out = all_nodes.join(comp, "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
-        )
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    edges = bind(edges, loop_session(spark, edges.count()))
+    prev_sig = None
+    for _ in range(max_iter):
+        edges = _small_star(_large_star(edges)).localCheckpoint()
+        # Order-independent edge-set signature: count + XOR of per-edge
+        # hashes (XOR cannot overflow under ANSI arithmetic, unlike SUM).
+        sig = edges.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64("e_src", "e_dst")).alias("h"),
+        ).first()
+        cur_sig = (sig["n"], sig["h"])
+        if cur_sig == prev_sig:
+            break
+        prev_sig = cur_sig
+    # At fixpoint edges form a star forest: (node -> component min).
+    comp = edges.groupBy(F.col("e_src").alias("id")).agg(
+        F.min("e_dst").alias("component")
+    )
+    # Roots (component minima) carry no outgoing edge — label them
+    # with themselves; nodes already labeled keep their star edge. The
+    # join runs at the caller's conf, like every plan after the loop.
+    return all_nodes.join(bind(comp, spark), "id", "left").select(
+        "id", F.coalesce("component", F.col("id")).alias("component")
+    )
 
 
 def simhash64(
@@ -773,9 +762,9 @@ def simhash64(
     # Built as SQL expr strings, not stacked Column calls: the 64 vote
     # aggregates cost ~400 py4j roundtrips as Column objects — plan
     # BUILD time measured 0.96 s vs 0.27 s for the identical expressions
-    # parsed from strings (r10; same optimization class as guide §1.2
-    # step 2 — the driver's per-query constant factor). Semantics are
-    # unchanged: shiftrightunsigned & 1, cast int, *2-1, sum.
+    # parsed from strings — the driver's per-query constant factor.
+    # Semantics are unchanged: shiftrightunsigned & 1, cast int, *2-1,
+    # sum.
     vote_aggs = [
         F.expr(
             f"sum(CAST(shiftrightunsigned({'hi' if i < 32 else 'lo'}, "
@@ -1035,12 +1024,12 @@ def positional_ngrams(
     at most one gram, so the relation is corpus-token-sized, and the
     shuffle carries 8-byte hashes, never gram text.
 
-    Gram keying (r10 optimization, guide §1.2 "per-task work"): each
-    WORD is hashed once into a per-row ``__wh`` long array (its own
-    Project, so the optimizer cannot inline it per gram), and each gram
-    key is the xxhash64 of the k-long slice of that array — hashing
-    8 longs (64 bytes) per gram instead of building and hashing a
-    k-word concat string. Same injectivity argument as before (a
+    Gram keying (per-task work): each WORD is hashed once into a per-row
+    ``__wh`` long array (its own Project, so the optimizer cannot inline
+    it per gram), and each gram key is the xxhash64 of the k-long slice
+    of that array — hashing 8 longs (64 bytes) per gram instead of
+    building and hashing a k-word concat string. Same injectivity
+    argument as :func:`word_shingle_keys` (a
     cross-gram collision needs ~2^32 distinct grams, birthday bound;
     the DuckDB oracle groups by the literal gram string, so agreement
     doubles as the collision check). Measured on sf0.1 documents with

@@ -19,6 +19,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import bind, with_conf
+
 
 def _edge_relation(
     pairs: DataFrame, src: str, dst: str, symmetrize: bool
@@ -38,16 +40,15 @@ def _edge_relation(
 
 
 class PairGraph:
-    """Loop-invariant graph relations shared by both PageRank variants
-    (r10, guide §5 caching-vs-recompute): the audit that runs the float
-    AND fixed-point iterations over the SAME pair relation previously
-    built the symmetrized edge relation, the node set, the out-degrees
-    and their counts twice — four materializations and three count jobs
-    of pure duplication. ``prepare_pair_graph`` builds them once; each
-    variant's solo path is unchanged (it prepares its own). Only valid
-    for ``symmetrize=True`` pair graphs (both catalog variants), where
-    the node set is exactly the source side and no dangling nodes exist
-    by construction."""
+    """Loop-invariant graph relations shared by both PageRank variants:
+    a caller that runs the float AND fixed-point iterations over the SAME
+    pair relation builds the symmetrized edge relation, the node set, the
+    out-degrees and their counts once instead of twice (four
+    materializations and three count jobs). ``pagerank_fixedpoint``'s
+    solo path prepares one; the float ``pagerank``'s builds its own. Only
+    valid for ``symmetrize=True`` pair graphs (both catalog variants),
+    where the node set is exactly the source side and no dangling nodes
+    exist by construction."""
 
     __slots__ = ("edges_deg", "nodes", "n_nodes", "n_edges")
 
@@ -62,14 +63,12 @@ def prepare_pair_graph(
     pairs: DataFrame, src: str = "d1", dst: str = "d2"
 ) -> PairGraph:
     """Materialize (edges+degrees, nodes, counts) for a SYMMETRIZED pair
-    graph once — see :class:`PairGraph`. For ``pagerank_fixedpoint`` the
-    prepared relations yield EXACT-identical ranks (int64 sums are
-    order-independent). For the float ``pagerank`` the node set is the
-    same (src-only distinct equals union(src,dst) distinct under
-    symmetrization) but the physical plan/partitioning differs from the
-    solo path's union-distinct, so float ranks agree up to double-
+    graph once — see :class:`PairGraph`. For the float ``pagerank`` the
+    node set is the same (src-only distinct equals union(src,dst) distinct
+    under symmetrization) but the physical plan/partitioning differs from
+    the solo path's union-distinct, so float ranks agree up to double-
     summation order (~1e-15 relative), not byte-for-byte — the audit's
-    parity test pins them at 1e-12 (ADVICE r10)."""
+    parity test pins them at 1e-12."""
     edges = _edge_relation(pairs, src, dst, symmetrize=True)
     nodes = edges.select(F.col("e_src").alias("id")).distinct().localCheckpoint()
     n_nodes = nodes.count()
@@ -78,32 +77,34 @@ def prepare_pair_graph(
     return PairGraph(edges_deg, nodes, n_nodes, edges_deg.count())
 
 
-def _loop_partitions(spark: SparkSession, n_edges: int) -> tuple[str, int]:
-    """(previous setting, loop-sized shuffle-partition count): candidate-
+#: Edges per shuffle partition in a driver-coordinated graph loop.
+EDGES_PER_LOOP_PARTITION = 500_000
+
+
+def loop_partitions(spark: SparkSession, n_edges: int) -> int:
+    """Shuffle-partition count for the rounds of a graph loop (both
+    PageRank variants, both connected-components variants). Candidate-
     pair graphs are orders of magnitude smaller than the corpus that
-    produced them, so iteration rounds shuffle on a graph-sized count,
-    not the session default. Shared by both PageRank variants.
+    produced them, and per-round fixed cost scales with task count, so
+    rounds shuffle on a graph-sized count, never above ``spark``'s.
 
-    Why this stays a session-conf set/restore (r11, VERDICT r10 #6
-    measured and REJECTED both alternatives): an explicit
-    ``repartition(loop_parts, key)`` on the per-round rank relation
-    inserts an unconditional extra Exchange every round (the old form's
-    groupBy output already satisfied the join's distribution), and
-    removing the sizing entirely to let AQE coalesce costs one adaptive
-    re-planning wait per shuffle stage per round — both measured ~30%
-    slower on dedup_pagerank_exact (1.04-1.10 s conf → 1.34-1.46 s
-    repartition → 1.38-1.40 s AQE-only, min-of-3 warm at sf0.1).
+    Loops run at this count in a ``session.with_conf`` clone rather
+    than through an explicit ``repartition`` or AQE alone: a
+    ``repartition(n, key)`` on the per-round relation adds an Exchange
+    every round (the groupBy output already satisfies the join's
+    distribution), and AQE-only sizing waits for one adaptive re-plan
+    per shuffle stage per round. Both measured ~30% slower on
+    dedup_pagerank_exact (1.04-1.10 s sized vs 1.34-1.46 s repartition
+    and 1.38-1.40 s AQE-only, min-of-3 warm at sf0.1, local[32])."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(parts, n_edges // EDGES_PER_LOOP_PARTITION + 1))
 
-    CONCURRENT loops instead follow the pin-outside protocol
-    (plans/llm_graph.py:pagerank_rank_audit): the caller computes
-    loop_parts from the shared prepared graph, sets the session conf
-    ONCE around the overlapped region, and the loops' own set/restore
-    becomes an idempotent no-op (every inner set writes the value the
-    outer pin already set; every inner restore writes the prev it read
-    inside the pinned region — the same value), so no interleaving can
-    leak a stale setting."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    return prev_parts, max(1, min(int(prev_parts), n_edges // 500_000 + 1))
+
+def loop_session(spark: SparkSession, n_edges: int) -> SparkSession:
+    """A clone of ``spark`` whose shuffles are sized by
+    :func:`loop_partitions`; ``spark`` itself never changes."""
+    parts = loop_partitions(spark, n_edges)
+    return with_conf(spark, {"spark.sql.shuffle.partitions": str(parts)})
 
 
 class _RoundCheckpointer:
@@ -205,73 +206,72 @@ def pagerank(
             has_dangling = dangling_nodes.count() > 0
         n_edges = edges_deg.count()
 
-    prev_parts, loop_parts = _loop_partitions(spark, n_edges)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        base = (1.0 - damping) / n_nodes
-        ranks = nodes.select("id", F.lit(1.0 / n_nodes).alias("rank"))
-        # Lineage truncated every 3 rounds (_RoundCheckpointer): each
-        # localCheckpoint is an eager job, and on a dangling-free graph
-        # (every symmetrized near-dup graph) the rounds in between stay
-        # lazy — 3 rounds fuse into one materialization, cutting
-        # scheduler round-trips ~3x while the stacked plan stays 3 joins
-        # deep. A dangling graph materializes every round anyway via the
-        # scalar mass probe, so the cadence only changes job count.
-        ckpt = _RoundCheckpointer(3)
-        prev_probe = ranks
-        for it in range(iters):
-            joined = edges_deg.join(
-                ranks.withColumnRenamed("id", "e_src"), "e_src"
+    loop = loop_session(spark, n_edges)
+    nodes, edges_deg = bind(nodes, loop), bind(edges_deg, loop)
+    if has_dangling:
+        dangling_nodes = bind(dangling_nodes, loop)
+    base = (1.0 - damping) / n_nodes
+    ranks = nodes.select("id", F.lit(1.0 / n_nodes).alias("rank"))
+    # Lineage truncated every 3 rounds (_RoundCheckpointer): each
+    # localCheckpoint is an eager job, and on a dangling-free graph
+    # (every symmetrized near-dup graph) the rounds in between stay
+    # lazy — 3 rounds fuse into one materialization, cutting
+    # scheduler round-trips ~3x while the stacked plan stays 3 joins
+    # deep. A dangling graph materializes every round anyway via the
+    # scalar mass probe, so the cadence only changes job count.
+    ckpt = _RoundCheckpointer(3)
+    prev_probe = ranks
+    for it in range(iters):
+        joined = edges_deg.join(
+            ranks.withColumnRenamed("id", "e_src"), "e_src"
+        )
+        contribs = joined.select(
+            F.col("e_dst").alias("id"),
+            (F.col("rank") / F.col("__deg")).alias("c"),
+        )
+        dangling = 0.0
+        if has_dangling:
+            dangling = (
+                ranks.join(dangling_nodes, "id", "left_semi")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+                .first()[0]
             )
-            contribs = joined.select(
-                F.col("e_dst").alias("id"),
-                (F.col("rank") / F.col("__deg")).alias("c"),
-            )
-            dangling = 0.0
-            if has_dangling:
-                dangling = (
-                    ranks.join(dangling_nodes, "id", "left_semi")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                    .first()[0]
+        in_sums = contribs.groupBy("id").agg(F.sum("c").alias("__in"))
+        if symmetrize:
+            # Symmetrized graph: every node has an in-edge, so the
+            # groupBy already covers the full node set — skip the
+            # per-round nodes left join (measured ~25% off the
+            # 10-round loop at sf0.1).
+            covered = in_sums
+        else:
+            # Directed graphs can have in-degree-0 nodes that only
+            # the node relation remembers.
+            covered = nodes.join(in_sums, "id", "left")
+        new_ranks = covered.select(
+            "id",
+            (
+                F.lit(base)
+                + F.lit(damping)
+                * (F.coalesce("__in", F.lit(0.0)) + F.lit(dangling / n_nodes))
+            ).alias("rank"),
+        )
+        was_ckpt = ckpt.is_boundary(it, iters)
+        ranks = ckpt.maybe(new_ranks, it, iters)
+        # Convergence probe at checkpoint boundaries only: both sides
+        # are materialized relations, so the probe is one in-memory
+        # (id, double) join + a scalar max to the driver.
+        if tol is not None and was_ckpt and it < iters - 1:
+            delta = (
+                ranks.join(
+                    prev_probe.withColumnRenamed("rank", "__prev"), "id"
                 )
-            in_sums = contribs.groupBy("id").agg(F.sum("c").alias("__in"))
-            if symmetrize:
-                # Symmetrized graph: every node has an in-edge, so the
-                # groupBy already covers the full node set — skip the
-                # per-round nodes left join (measured ~25% off the
-                # 10-round loop at sf0.1).
-                covered = in_sums
-            else:
-                # Directed graphs can have in-degree-0 nodes that only
-                # the node relation remembers.
-                covered = nodes.join(in_sums, "id", "left")
-            new_ranks = covered.select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce("__in", F.lit(0.0)) + F.lit(dangling / n_nodes))
-                ).alias("rank"),
+                .agg(F.max(F.abs(F.col("rank") - F.col("__prev"))))
+                .first()[0]
             )
-            was_ckpt = ckpt.is_boundary(it, iters)
-            ranks = ckpt.maybe(new_ranks, it, iters)
-            # Convergence probe at checkpoint boundaries only: both sides
-            # are materialized relations, so the probe is one in-memory
-            # (id, double) join + a scalar max to the driver.
-            if tol is not None and was_ckpt and it < iters - 1:
-                delta = (
-                    ranks.join(
-                        prev_probe.withColumnRenamed("rank", "__prev"), "id"
-                    )
-                    .agg(F.max(F.abs(F.col("rank") - F.col("__prev"))))
-                    .first()[0]
-                )
-                prev_probe = ranks
-                if delta is not None and delta < tol:
-                    break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return ranks
+            prev_probe = ranks
+            if delta is not None and delta < tol:
+                break
+    return bind(ranks, spark)
 
 
 def triangle_stats(
@@ -382,44 +382,30 @@ def pagerank_fixedpoint(
     truncated every 3 rounds.
     """
     spark = pairs.sparkSession
-    if prepared is not None:
-        nodes, n_nodes = prepared.nodes, prepared.n_nodes
-        edges_deg, n_edges = prepared.edges_deg, prepared.n_edges
-    else:
-        edges = _edge_relation(pairs, src, dst, symmetrize=True)
-        nodes = (
-            edges.select(F.col("e_src").alias("id")).distinct().localCheckpoint()
-        )  # symmetrized: src set == node set
-        n_nodes = nodes.count()
-        out_deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("__deg"))
-        edges_deg = edges.join(out_deg, "e_src").localCheckpoint()
-        n_edges = edges_deg.count()
-    if n_nodes == 0:
-        return nodes.withColumn("rank_u", F.lit(0).cast("long"))
+    g = prepared if prepared is not None else prepare_pair_graph(pairs, src, dst)
+    if g.n_nodes == 0:
+        return g.nodes.withColumn("rank_u", F.lit(0).cast("long"))
 
-    init = scale // n_nodes
+    init = scale // g.n_nodes
     base = ((damp_den - damp_num) * init) // damp_den
 
-    prev_parts, loop_parts = _loop_partitions(spark, n_edges)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        ranks = nodes.select("id", F.lit(init).cast("long").alias("rank_u"))
-        ckpt = _RoundCheckpointer(3)
-        for it in range(iters):
-            joined = edges_deg.join(ranks.withColumnRenamed("id", "e_src"), "e_src")
-            contribs = joined.select(
-                F.col("e_dst").alias("id"),
-                F.expr("rank_u div __deg").alias("c"),
+    loop = loop_session(spark, g.n_edges)
+    nodes, edges_deg = bind(g.nodes, loop), bind(g.edges_deg, loop)
+    ranks = nodes.select("id", F.lit(init).cast("long").alias("rank_u"))
+    ckpt = _RoundCheckpointer(3)
+    for it in range(iters):
+        joined = edges_deg.join(ranks.withColumnRenamed("id", "e_src"), "e_src")
+        contribs = joined.select(
+            F.col("e_dst").alias("id"),
+            F.expr("rank_u div __deg").alias("c"),
+        )
+        new_ranks = contribs.groupBy("id").agg(
+            (
+                F.lit(base)
+                + F.expr(f"({damp_num} * sum(c)) div {damp_den}")
             )
-            new_ranks = contribs.groupBy("id").agg(
-                (
-                    F.lit(base)
-                    + F.expr(f"({damp_num} * sum(c)) div {damp_den}")
-                )
-                .cast("long")
-                .alias("rank_u")
-            )
-            ranks = ckpt.maybe(new_ranks, it, iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return ranks
+            .cast("long")
+            .alias("rank_u")
+        )
+        ranks = ckpt.maybe(new_ranks, it, iters)
+    return bind(ranks, spark)

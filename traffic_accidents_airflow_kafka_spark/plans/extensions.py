@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.asof import asof_join
+from ..session import pin_runtime_conf
 from ..sources.tables import load_table
 from .registry import dec_sum, register
 
@@ -2557,12 +2558,9 @@ def overpass_pyds_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception as exc:  # tolerate ONLY double-registration
         if "EXISTS" not in str(exc).upper():
             raise
-    # Runtime conf, set here so the pushdown works under ANY session (the
-    # engine's get_spark also defaults it on). Deliberately NOT restored:
-    # the scan plans lazily, so the flag must still hold when the caller
-    # first executes the returned DataFrame — and it only affects Python
-    # data sources, all of which in this engine implement pushFilters.
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    # Pinned, not scoped: the scan plans lazily, so the pushdown flag must
+    # still hold when the caller first executes the returned DataFrame.
+    pin_runtime_conf(spark)
     nodes = spark.read.format("overpass").load()
     return (
         nodes.groupBy("category")

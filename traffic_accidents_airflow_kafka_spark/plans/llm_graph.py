@@ -128,16 +128,15 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE (r9): the float damped-power-iteration PageRank is a LIBRARY
+# NOTE: the float damped-power-iteration PageRank is a LIBRARY
 # function (operators/graph.py:pagerank — per-engine float accumulation
 # order differs in the last ulps, so it can never value-hash), not a
 # catalog slot: the catalog serves ranks through dedup_pagerank_exact
 # (the bit-replayable int64 fixed-point twin, FULL 10-round SQL oracle)
 # and the float path stays exercised + banded-pinned by
 # pagerank_rank_audit below (node set, values within 1e-6, top-10/top-1
-# ordering agreement vs the fixed-point ranks). This retires the
-# catalog's last rows-only row (r8 VERDICT #5): every registered query
-# now carries a full or banded value-hash oracle.
+# ordering agreement vs the fixed-point ranks). So every registered
+# query carries a full or banded value-hash oracle; none is rows-only.
 
 
 def _pagerank_fp_oracle(iters: int = 10, scale: int = 10**12) -> str:
@@ -249,48 +248,26 @@ def dedup_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pagerank_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _neardup_pairs(spark, sf_dir)
-    # r10 (guide §5): both variants consume the IDENTICAL symmetrized
-    # edge relation, node set and out-degrees — prepare them once
-    # instead of materializing + counting them twice. Ranks are
-    # unchanged by construction — prepare_pair_graph builds
-    # byte-identical relations.
+    # Both variants consume the IDENTICAL symmetrized edge relation, node
+    # set and out-degrees — prepared once, not materialized and counted
+    # twice; prepare_pair_graph builds byte-identical relations, so ranks
+    # are unchanged. The two 10-round loops overlap: each runs in its own
+    # session clone, so neither can see the other's shuffle sizing. Each
+    # thread fully materializes its rank relation (cache + count) so the
+    # loops interleave their per-round jobs instead of serializing on the
+    # later collects.
     g = graph.prepare_pair_graph(pairs, "d1", "d2")
-    # r11 (guide §2.6 overlap independent jobs — the twice-rejected
-    # overlap, now safe): both loops set/restore the session-global
-    # shuffle-partition conf, so running them concurrently used to race.
-    # The pin-outside protocol (operators/graph.py:_loop_partitions)
-    # removes the race without touching the loops: both variants share
-    # ONE prepared graph, hence the identical loop_parts — pinning the
-    # conf here for the overlapped region makes every inner set/restore
-    # an idempotent no-op whatever the interleaving. Each thread fully
-    # materializes its rank relation (cache + count) so the two
-    # 10-round driver-coordinated loops genuinely interleave their
-    # per-round jobs instead of serializing on the later collects.
     from concurrent.futures import ThreadPoolExecutor
 
-    prev_parts, loop_parts = graph._loop_partitions(spark, g.n_edges)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
+    def _run(fn, **kw):
+        df = fn(pairs, "d1", "d2", iters=10, prepared=g, **kw).cache()
+        df.count()
+        return df
 
-            def _run(fn):
-                df = fn(
-                    pairs, "d1", "d2", iters=10, prepared=g
-                ).cache()
-                df.count()
-                return df
-
-            f_fl = pool.submit(
-                lambda: _run(
-                    lambda p, s, d, iters, prepared: graph.pagerank(
-                        p, s, d, damping=0.85, iters=iters, prepared=prepared
-                    )
-                )
-            )
-            f_fx = pool.submit(lambda: _run(graph.pagerank_fixedpoint))
-            fl, fx = f_fl.result(), f_fx.result()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_fl = pool.submit(_run, graph.pagerank, damping=0.85)
+        f_fx = pool.submit(_run, graph.pagerank_fixedpoint)
+        fl, fx = f_fl.result(), f_fx.result()
     scale = float(10**12)
     stats = (
         fl.join(fx, "id", "full_outer")

@@ -12,6 +12,10 @@ correctness-first local runs but scale-out safe:
 - Shuffle partitions default to the local core count; on a real cluster pass
   ``shuffle_partitions`` ≈ 2-3× total executor cores (or rely on AQE to
   coalesce from a higher initial number).
+
+Only this module writes session conf: read paths call
+:func:`pin_runtime_conf`; a region that needs other conf runs in a
+:func:`with_conf` clone.
 """
 
 from __future__ import annotations
@@ -19,9 +23,18 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_APP_NAME = "traffic-accidents-spark-engine"
+
+#: Runtime confs every read needs, whichever factory built the session:
+#: UTC date parts (as the DuckDB oracle), TIMESTAMP(NANOS) events read as
+#: long, ``pushFilters`` for Python data sources (off by default).
+RUNTIME_PINS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.python.filterPushdown.enabled": "true",
+}
 
 
 def _default_parallelism() -> int:
@@ -29,6 +42,46 @@ def _default_parallelism() -> int:
     if cpus and cpus.isdigit():
         return int(cpus)
     return os.cpu_count() or 8
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Local mode runs every executor thread in the driver JVM, so the
+    driver heap IS the executor heap: 8g showed late-session GC inflation
+    on long catalog runs (ngram_jaccard_pairs 7.4 s in-catalog vs 3.0 s
+    isolated; 24g: 3.2 s). 16g, capped at MemTotal minus 4 GiB for the
+    Python workers and the OS; 16g when ``meminfo`` is unreadable."""
+    try:
+        with open(meminfo) as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, ValueError, IndexError, StopIteration):
+        return "16g"
+    return f"{max(1024, min(16 * 1024, kb // 1024 - 4 * 1024))}m"
+
+
+def pin_runtime_conf(spark: SparkSession) -> None:
+    """Set :data:`RUNTIME_PINS` on ``spark``, which may come from a
+    factory other than :func:`get_spark`."""
+    for key, value in RUNTIME_PINS.items():
+        spark.conf.set(key, value)
+
+
+def with_conf(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` with ``conf`` set; ``spark`` never changes.
+    The clone keeps the runtime conf, temp views and UDFs (``newSession()``
+    drops runtime conf). Parent listeners do not see its streams."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for key, value in conf.items():
+        clone.conf.set(key, value)
+    return clone
+
+
+def bind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a DataFrame of ``spark``: a DataFrame is planned
+    under its own session's conf, whatever thread runs it."""
+    jds = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jds, spark)
 
 
 def get_spark(
@@ -75,29 +128,22 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Let Python DataSources (sources/pyds.py) receive pushFilters —
-        # partition pruning at the source, off by default in 4.1.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Local-mode niceties; harmless on a cluster.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        # Local mode runs all 32 executor threads inside the driver JVM, so
-        # the driver heap IS the executor heap: 8g showed late-session GC
-        # inflation on long catalog runs (ngram_jaccard_pairs read 7.4 s
-        # in-catalog vs 3.0 s isolated; 24g normalized it to 3.2 s and cut
-        # the 66-query total ~10%). 16g is the local default; cluster
-        # deploys size the driver via spark-submit as usual.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # Cluster deploys size the driver via spark-submit as usual.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.executorEnv.PYTHONWARNINGS", os.environ["PYTHONWARNINGS"])
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in {**RUNTIME_PINS, **(extra_conf or {})}.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -14,6 +14,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import pin_runtime_conf
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table as a lazy DataFrame.
@@ -24,21 +26,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     a true ``TimestampType`` truncated to microseconds — Spark's native
     precision, matching what every downstream date-part function expects.
     """
-    # Date-part extraction (hour/year/dayname) is session-timezone
-    # dependent; the DuckDB oracle computes on naive timestamps. Pin UTC
-    # here so catalog queries are correct even under a session this
-    # engine's factory didn't build (runtime-settable conf).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # Date parts need UTC and events need nanosAsLong even under a session
+    # this engine's factory didn't build.
+    pin_runtime_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        return df
-    return spark.read.parquet(path)
+    df = spark.read.parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def scan(

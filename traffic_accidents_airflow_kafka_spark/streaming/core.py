@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import bind, pin_runtime_conf, with_conf
+
 #: The 7 result topics (kafka/consumer.py:6-14).
 TOPICS = (
     "transit_signals_by_state",
@@ -117,12 +119,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     swaps the source format only — downstream plan identical).
 
     Surfaces ``ts`` as session-zone TimestampType (UTC is pinned by
-    ``sources.tables.load_table``) whatever the file stores — long nanos,
+    ``session.pin_runtime_conf``) whatever the file stores — long nanos,
     timestamp_ntz micros, or a plain timestamp — so every downstream
     consumer (windows, watermarks, unix_micros) sees one type.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_runtime_conf(spark)
     schema = _events_stream_schema(spark, sf_dir)
     raw = stream_table_source(spark, sf_dir, "events", schema)
     ts_type = dict(raw.dtypes)["ts"]
@@ -179,7 +180,10 @@ def run_available_now(
     micro-batch). A streaming agg's partition count should track live-key
     cardinality × throughput, NOT the batch shuffle default — it is
     pinned into the checkpoint at first start, so it's a per-query
-    decision, not a session one. None keeps the session setting.
+    decision, not a session one: the query runs in a clone of ``spark``
+    with that setting (None keeps the session setting). A listener
+    registered on ``spark`` therefore does not see a query started with
+    ``state_partitions``.
     """
     name = f"avnow_{uuid.uuid4().hex[:12]}"
     # Checkpoint on tmpfs when available: availableNow pays checkpoint
@@ -187,9 +191,11 @@ def run_available_now(
     # the returned result. Durable streams pass their own location.
     ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=ckpt_base)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    run = spark
     if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        parts = {"spark.sql.shuffle.partitions": str(state_partitions)}
+        run = with_conf(spark, parts)
+        result = bind(result, run)
     try:
         q = (
             result.writeStream.format("memory")
@@ -201,11 +207,9 @@ def run_available_now(
         )
         q.awaitTermination()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         # The memory-sink result outlives the checkpoint; reclaim the tmpfs.
         shutil.rmtree(checkpoint, ignore_errors=True)
-    return spark.table(name)
+    return bind(run.table(name), spark)
 
 
 def dedup_stream(
